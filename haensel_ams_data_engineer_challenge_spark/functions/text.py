@@ -11,24 +11,20 @@ Tokenization contract (shared with oracles):
 Empty/short inputs yield empty shingle arrays (guarded — Spark's
 ``sequence(1, 0)`` counts *down*, unlike DuckDB's ``range``).
 
-Construction path (round 16, guide §5): when the input is a plain
-column NAME — every call site in the engine — each public function
-composes its WHOLE expression as one SQL string and parses it with a
-single ``F.expr`` round-trip, instead of issuing one py4j call per
-Catalyst node (the per-call Column builders made text.py the second
-largest construction-chatter source after the NB pivot: ~600
-round-trips per text_stats build).  The parsed expression tree is the
-same tree the Column API built; results are bit-identical (pinned by
-the oracle parity gate and the unit tests).  A genuine ``Column``
-input takes the original Column-API branch — THE TWO BRANCHES MUST
-STAY IN LOCK-STEP (and with the DuckDB twin in each docstring).
+Construction: every helper takes a column NAME (anything ``F.col``
+accepts, nested fields included) and composes its WHOLE expression as
+one SQL string — the name through ``sqlexpr.sql_ref``, string values
+through ``sqlexpr.sql_str`` — parsed by a single ``F.expr`` round-trip
+instead of one py4j call per Catalyst node.  The DuckDB twin in each
+docstring is the contract: the oracle parity gate pins the two
+engines bit-identical.
 """
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import Column, functions as F
+
+from .sqlexpr import sql_ref, sql_str
 
 #: BPE-ish token pattern: letter runs, digit runs, single punctuation.
 BPE_ISH_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
@@ -44,30 +40,12 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
 
 EN_STOPWORDS = LANG_STOPWORDS["en"]
 
-#: names eligible for the single-parse SQL path (simple identifiers —
-#: dotted/exotic names keep F.col's nested-field semantics).
-_IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
-
-
-def _name(col: Column | str) -> str | None:
-    """The backtick-quoted SQL reference when ``col`` is a simple
-    column name, else None (caller falls back to the Column branch)."""
-    if isinstance(col, str) and _IDENT.match(col):
-        return f"`{col}`"
-    return None
-
-
-def _sql_s(s: str) -> str:
-    """SQL single-quoted string literal (escapedStringLiterals=false
-    parser: backslash escapes)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
 
 def _sql_arr(items: tuple[str, ...]) -> str:
-    return "array(" + ", ".join(_sql_s(s) for s in items) + ")"
+    return "array(" + ", ".join(sql_str(s) for s in items) + ")"
 
 
-_WS_PAT = _sql_s(r"\s+")
+_WS_PAT = sql_str(r"\s+")
 
 
 def _tokens_sql(ref: str) -> str:
@@ -88,37 +66,26 @@ def _word_shingles_sql(ref: str, n: int) -> str:
     )
 
 
-def tokens(col: Column | str) -> Column:
+def tokens(col: str) -> Column:
     """Whitespace tokens of lower-cased text.
     DuckDB twin: string_split_regex(trim(lower(x)), '\\s+')."""
-    ref = _name(col)
-    if ref is not None:
-        return F.expr(_tokens_sql(ref))
-    c = F.col(col) if isinstance(col, str) else col
-    return F.split(F.trim(F.lower(c)), r"\s+")
+    return F.expr(_tokens_sql(sql_ref(col)))
 
 
-def token_count(col: Column | str) -> Column:
-    ref = _name(col)
-    if ref is not None:
-        return F.expr(f"size({_tokens_sql(ref)})")
-    return F.size(tokens(col))
+def token_count(col: str) -> Column:
+    return F.expr(f"size({_tokens_sql(sql_ref(col))})")
 
 
-def bpe_ish_count(col: Column | str) -> Column:
+def bpe_ish_count(col: str) -> Column:
     """Token count under the BPE-ish regex.
     DuckDB twin: len(regexp_extract_all(x, pattern))."""
-    ref = _name(col)
-    if ref is not None:
-        return F.expr(
-            f"size(regexp_extract_all({ref}, "
-            f"{_sql_s(BPE_ISH_PATTERN)}, 0))"
-        )
-    c = F.col(col) if isinstance(col, str) else col
-    return F.size(F.regexp_extract_all(c, F.lit(BPE_ISH_PATTERN), 0))
+    return F.expr(
+        f"size(regexp_extract_all({sql_ref(col)}, "
+        f"{sql_str(BPE_ISH_PATTERN)}, 0))"
+    )
 
 
-def word_shingles(col: Column | str, n: int = 3) -> Column:
+def word_shingles(col: str, n: int = 3) -> Column:
     """Distinct space-joined word n-grams.
     DuckDB twin: list_distinct(list_transform(range(1,
     greatest(len(toks)-n+1,0)+1), i -> array_to_string(toks[i:i+n-1],' '))).
@@ -128,51 +95,26 @@ def word_shingles(col: Column | str, n: int = 3) -> Column:
     elimination does not reach inside higher-order lambdas, so the
     naive form re-ran the tokenizer regex for EVERY shingle position
     (measured 3.0 s vs 0.7 s warm for the corpus-wide explode at
-    sf0.1 — the vocab.py lesson, fixed here inside the Column API so
-    every call site inherits it).  Results are bit-identical.
+    sf0.1 — the vocab.py lesson, fixed here so every call site inherits
+    it).  Results are bit-identical.
     """
-    ref = _name(col)
-    if ref is not None:
-        return F.expr(_word_shingles_sql(ref, n))
-
-    def _grams(t: Column) -> Column:
-        return F.when(
-            F.size(t) >= n,
-            F.transform(
-                F.sequence(F.lit(1), F.size(t) - (n - 1)),
-                lambda i: F.concat_ws(" ", F.slice(t, i, n)),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-
-    return F.array_distinct(
-        F.element_at(F.transform(F.array(tokens(col)), _grams), 1)
-    )
+    return F.expr(_word_shingles_sql(sql_ref(col), n))
 
 
-def char_shingles(col: Column | str, n: int = 8) -> Column:
+def char_shingles(col: str, n: int = 8) -> Column:
     """Distinct sliding n-char substrings of the raw text.
     DuckDB twin: list_distinct(list_transform(range(1,
     greatest(length(x)-n+1,0)+1), i -> substr(x, i, n)))."""
-    ref = _name(col)
-    if ref is not None:
-        return F.expr(
-            f"array_distinct(CASE WHEN length({ref}) >= {n} THEN "
-            f"transform(sequence(1, length({ref}) - {n - 1}), "
-            f"i -> substring({ref}, i, {n})) "
-            f"ELSE CAST(array() AS ARRAY<STRING>) END)"
-        )
-    c = F.col(col) if isinstance(col, str) else col
-    grams = F.when(
-        F.length(c) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.length(c) - (n - 1)),
-            lambda i: F.substring(c, i, n),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return F.array_distinct(grams)
+    ref = sql_ref(col)
+    return F.expr(
+        f"array_distinct(CASE WHEN length({ref}) >= {n} THEN "
+        f"transform(sequence(1, length({ref}) - {n - 1}), "
+        f"i -> substring({ref}, i, {n})) "
+        f"ELSE CAST(array() AS ARRAY<STRING>) END)"
+    )
 
 
-def repetition_ratio(col: Column | str, n: int = 3) -> Column:
+def repetition_ratio(col: str, n: int = 3) -> Column:
     """Fraction of repeated word n-grams: 1 - distinct/total (0 when
     fewer than n tokens).  The Gopher-style intra-document repetition
     signal (Rae et al. 2021, §A1.1 "repeated n-grams") — high values
@@ -180,39 +122,25 @@ def repetition_ratio(col: Column | str, n: int = 3) -> Column:
     DuckDB twin: 1.0 - len(list_distinct(grams)) / greatest(len(toks)-n+1, 1)
     with grams = list_transform(range(1, greatest(len(toks)-n+1,0)+1),
     i -> array_to_string(toks[i:i+n-1], ' '))."""
-    ref = _name(col)
-    if ref is not None:
-        total = f"greatest(size({_tokens_sql(ref)}) - {n - 1}, 0)"
-        distinct = f"size({_word_shingles_sql(ref, n)})"
-        return F.expr(
-            f"CASE WHEN {total} > 0 THEN "
-            f"1.0D - CAST({distinct} AS DOUBLE) / CAST({total} AS DOUBLE) "
-            f"ELSE 0.0D END"
-        )
-    t = tokens(col)
-    total = F.greatest(F.size(t) - (n - 1), F.lit(0))
-    distinct = F.size(word_shingles(col, n))
-    return F.when(
-        total > 0,
-        F.lit(1.0) - distinct.cast("double") / total.cast("double"),
-    ).otherwise(F.lit(0.0))
+    ref = sql_ref(col)
+    total = f"greatest(size({_tokens_sql(ref)}) - {n - 1}, 0)"
+    distinct = f"size({_word_shingles_sql(ref, n)})"
+    return F.expr(
+        f"CASE WHEN {total} > 0 THEN "
+        f"1.0D - CAST({distinct} AS DOUBLE) / CAST({total} AS DOUBLE) "
+        f"ELSE 0.0D END"
+    )
 
 
-def punct_ratio(col: Column | str) -> Column:
+def punct_ratio(col: str) -> Column:
     """Punctuation chars / total chars (0 for empty text)."""
-    ref = _name(col)
-    if ref is not None:
-        n_punct = (
-            f"length(regexp_replace({ref}, {_sql_s('[^.!?,;:]')}, ''))"
-        )
-        return F.expr(
-            f"CASE WHEN length({ref}) > 0 THEN "
-            f"CAST({n_punct} AS DOUBLE) / CAST(length({ref}) AS DOUBLE) "
-            f"ELSE 0.0D END"
-        )
-    c = F.col(col) if isinstance(col, str) else col
-    n_punct = F.length(F.regexp_replace(c, r"[^.!?,;:]", ""))
-    return F.when(F.length(c) > 0, n_punct.cast("double") / F.length(c).cast("double")).otherwise(F.lit(0.0))
+    ref = sql_ref(col)
+    n_punct = f"length(regexp_replace({ref}, {sql_str('[^.!?,;:]')}, ''))"
+    return F.expr(
+        f"CASE WHEN length({ref}) > 0 THEN "
+        f"CAST({n_punct} AS DOUBLE) / CAST(length({ref}) AS DOUBLE) "
+        f"ELSE 0.0D END"
+    )
 
 
 def _distinct_hits_sql(ref: str, stopwords: tuple[str, ...]) -> str:
@@ -223,71 +151,49 @@ def _distinct_hits_sql(ref: str, stopwords: tuple[str, ...]) -> str:
     )
 
 
-def stopword_ratio(col: Column | str, stopwords: tuple[str, ...] = EN_STOPWORDS) -> Column:
+def stopword_ratio(col: str, stopwords: tuple[str, ...] = EN_STOPWORDS) -> Column:
     """Distinct stopwords present / distinct tokens (0 for empty)."""
-    ref = _name(col)
-    if ref is not None:
-        nt = f"size(array_distinct({_tokens_sql(ref)}))"
-        return F.expr(
-            f"CASE WHEN {nt} > 0 THEN "
-            f"CAST({_distinct_hits_sql(ref, stopwords)} AS DOUBLE)"
-            f" / CAST({nt} AS DOUBLE) ELSE 0.0D END"
-        )
-    t = F.array_distinct(tokens(col))
-    hits = F.size(F.array_intersect(t, F.array(*[F.lit(s) for s in stopwords])))
-    return F.when(F.size(t) > 0, hits.cast("double") / F.size(t).cast("double")).otherwise(F.lit(0.0))
+    ref = sql_ref(col)
+    nt = f"size(array_distinct({_tokens_sql(ref)}))"
+    return F.expr(
+        f"CASE WHEN {nt} > 0 THEN "
+        f"CAST({_distinct_hits_sql(ref, stopwords)} AS DOUBLE)"
+        f" / CAST({nt} AS DOUBLE) ELSE 0.0D END"
+    )
 
 
-def mean_word_len(col: Column | str) -> Column:
+def mean_word_len(col: str) -> Column:
     """Mean token length in characters (0 for empty text).  Integer
     length-sum + one double division, so Spark and DuckDB agree
     bit-for-bit.  DuckDB twin:
     CAST(list_sum(list_transform(toks, t -> length(t))) AS DOUBLE)
     / CAST(len(toks) AS DOUBLE)."""
-    ref = _name(col)
-    if ref is not None:
-        t = _tokens_sql(ref)
-        total = f"aggregate({t}, 0, (acc, x) -> acc + length(x))"
-        return F.expr(
-            f"CASE WHEN size({t}) > 0 THEN "
-            f"CAST({total} AS DOUBLE) / CAST(size({t}) AS DOUBLE) "
-            f"ELSE 0.0D END"
-        )
-    t = tokens(col)
-    total = F.aggregate(t, F.lit(0), lambda acc, x: acc + F.length(x))
-    return F.when(
-        F.size(t) > 0, total.cast("double") / F.size(t).cast("double")
-    ).otherwise(F.lit(0.0))
+    t = _tokens_sql(sql_ref(col))
+    total = f"aggregate({t}, 0, (acc, x) -> acc + length(x))"
+    return F.expr(
+        f"CASE WHEN size({t}) > 0 THEN "
+        f"CAST({total} AS DOUBLE) / CAST(size({t}) AS DOUBLE) "
+        f"ELSE 0.0D END"
+    )
 
 
-def alpha_word_frac(col: Column | str) -> Column:
+def alpha_word_frac(col: str) -> Column:
     """Fraction of tokens containing at least one letter (tokens are
     lower-cased by the tokenization contract, so [a-z] suffices).
     DuckDB twin: CAST(len(list_filter(toks, t ->
     regexp_matches(t, '[a-z]'))) AS DOUBLE) / CAST(len(toks) AS DOUBLE)."""
-    ref = _name(col)
-    if ref is not None:
-        t = _tokens_sql(ref)
-        hits = f"size(filter({t}, x -> x RLIKE '[a-z]'))"
-        return F.expr(
-            f"CASE WHEN size({t}) > 0 THEN "
-            f"CAST({hits} AS DOUBLE) / CAST(size({t}) AS DOUBLE) "
-            f"ELSE 0.0D END"
-        )
-    t = tokens(col)
-    hits = F.size(F.filter(t, lambda x: x.rlike("[a-z]")))
-    return F.when(
-        F.size(t) > 0, hits.cast("double") / F.size(t).cast("double")
-    ).otherwise(F.lit(0.0))
+    t = _tokens_sql(sql_ref(col))
+    hits = f"size(filter({t}, x -> x RLIKE '[a-z]'))"
+    return F.expr(
+        f"CASE WHEN size({t}) > 0 THEN "
+        f"CAST({hits} AS DOUBLE) / CAST(size({t}) AS DOUBLE) "
+        f"ELSE 0.0D END"
+    )
 
 
-def stopword_hits(col: Column | str, stopwords: tuple[str, ...] = EN_STOPWORDS) -> Column:
+def stopword_hits(col: str, stopwords: tuple[str, ...] = EN_STOPWORDS) -> Column:
     """Count of distinct stopwords present in the text."""
-    ref = _name(col)
-    if ref is not None:
-        return F.expr(_distinct_hits_sql(ref, stopwords))
-    t = F.array_distinct(tokens(col))
-    return F.size(F.array_intersect(t, F.array(*[F.lit(s) for s in stopwords])))
+    return F.expr(_distinct_hits_sql(sql_ref(col), stopwords))
 
 
 #: Gopher rule bounds (Rae et al. 2021, §A1.1) — the published
@@ -305,7 +211,7 @@ GOPHER_MIN_STOPWORD_HITS = 2
 GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
 
-def gopher_quality_pass(col: Column | str) -> Column:
+def gopher_quality_pass(col: str) -> Column:
     """Boolean Gopher document filter: word count in [50, 100k], mean
     word length in [3, 10], >= 80% of words contain a letter, and
     >= 2 of Gopher's published 8 stopwords present.  The published
@@ -370,44 +276,28 @@ def redact_pii(col: Column | str) -> Column:
     return c
 
 
-def langid_scores(col: Column | str) -> dict[str, Column]:
+def langid_scores(col: str) -> dict[str, Column]:
     """Distinct-stopword hit count per language."""
-    ref = _name(col)
-    if ref is not None:
-        return {
-            lang: F.expr(_distinct_hits_sql(ref, words))
-            for lang, words in sorted(LANG_STOPWORDS.items())
-        }
-    t = F.array_distinct(tokens(col))
+    ref = sql_ref(col)
     return {
-        lang: F.size(F.array_intersect(t, F.array(*[F.lit(s) for s in words])))
+        lang: F.expr(_distinct_hits_sql(ref, words))
         for lang, words in sorted(LANG_STOPWORDS.items())
     }
 
 
-def langid(col: Column | str) -> Column:
+def langid(col: str) -> Column:
     """Argmax language with deterministic alphabetical tie-break."""
-    ref = _name(col)
-    if ref is not None:
-        scores = {
-            lang: _distinct_hits_sql(ref, words)
-            for lang, words in sorted(LANG_STOPWORDS.items())
-        }
-        best = "greatest(" + ", ".join(scores.values()) + ")"
-        expr = "'und'"
-        # reversed: earlier alphabetical language wins ties
-        for lang in sorted(scores, reverse=True):
-            expr = (
-                f"CASE WHEN {scores[lang]} = {best} "
-                f"THEN {_sql_s(lang)} ELSE {expr} END"
-            )
-        return F.expr(
-            f"CASE WHEN {best} > 0 THEN {expr} ELSE 'und' END"
-        )
-    scores = langid_scores(col)
-    best = F.greatest(*scores.values())
-    expr = F.lit("und")
+    ref = sql_ref(col)
+    scores = {
+        lang: _distinct_hits_sql(ref, words)
+        for lang, words in sorted(LANG_STOPWORDS.items())
+    }
+    best = "greatest(" + ", ".join(scores.values()) + ")"
+    expr = "'und'"
     # reversed: earlier alphabetical language wins ties
     for lang in sorted(scores, reverse=True):
-        expr = F.when(scores[lang] == best, F.lit(lang)).otherwise(expr)
-    return F.when(best > 0, expr).otherwise(F.lit("und"))
+        expr = (
+            f"CASE WHEN {scores[lang]} = {best} "
+            f"THEN {sql_str(lang)} ELSE {expr} END"
+        )
+    return F.expr(f"CASE WHEN {best} > 0 THEN {expr} ELSE 'und' END")

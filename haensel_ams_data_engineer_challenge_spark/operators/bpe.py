@@ -44,6 +44,7 @@ import re
 from pyspark.sql import Column, DataFrame, Row, functions as F
 
 from ..checkpoint import materialize
+from ..functions.sqlexpr import sql_ref, sql_str
 from .retrieval import search_tokens
 
 #: word-end marker appended to a word's final character symbol.
@@ -560,21 +561,17 @@ def bpe_segment(
     _check_merges(merges)
 
     # the whole per-word bracket-replace chain parses as ONE expr
-    # string (round 16, guide §5): the per-merge F.replace Column
-    # calls were ~90 py4j round-trips per build; the parsed tree is
-    # identical.  Symbols are _SYMBOL_RE-validated ([a-z0-9]+ + </w>),
-    # but quote for SQL anyway.
-    def q(s: str) -> str:
-        return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-    s = f"concat('[', array_join(split(w, ''), ']['), {q(END + ']')})"
+    # string (~90 fewer py4j round-trips per build than one replace
+    # call per merge).  Symbols are _SYMBOL_RE-validated ([a-z0-9]+ +
+    # </w>), but quote for SQL anyway.
+    s = f"concat('[', array_join(split(w, ''), ']['), {sql_str(END + ']')})"
     for a, b in merges:
-        s = f"replace({s}, {q(f'[{a}][{b}]')}, {q(f'[{a + b}]')})"
+        s = f"replace({s}, {sql_str(f'[{a}][{b}]')}, {sql_str(f'[{a + b}]')})"
     seg = f"split(substr({s}, 2, length({s}) - 2), '\\\\]\\\\[')"
     return docs.withColumn(
         out_col,
         F.expr(
-            f"flatten(transform(regexp_extract_all(lower({text_col}), "
+            f"flatten(transform(regexp_extract_all(lower({sql_ref(text_col)}), "
             f"'[a-z0-9]+', 0), w -> {seg}))"
         ),
     )

@@ -43,6 +43,7 @@ import threading
 from pyspark.sql import DataFrame, functions as F
 
 from ..checkpoint import materialize
+from ..functions.sqlexpr import sql_str
 from .retrieval import search_tokens
 
 
@@ -308,13 +309,6 @@ def _nb_score(
 NB_PIVOT_MAX_CLASSES = 64
 
 
-def _sql_str(s: str) -> str:
-    """A SQL single-quoted string literal for ``s`` (backslash and
-    quote escaped — Spark's default escapedStringLiterals=false
-    parser)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
 def _sql_dbl(v: float) -> str:
     """An exactly-value-preserving DOUBLE literal for ``v``: repr
     round-trips through Double.parseDouble bit-for-bit and the cast
@@ -340,7 +334,7 @@ def _nb_score_pivot(
     j = ex.select("__did", "term").join(lnp, "term")
     aggs = []
     for i, (c, _p, _z) in enumerate(cls_rows):
-        lbl = _sql_str(c)
+        lbl = sql_str(c)
         aggs.append(F.expr(
             f"sum(CASE WHEN __mlbl = {lbl} THEN __lnp_s END) AS __s{i}"
         ))
@@ -358,7 +352,7 @@ def _nb_score_pivot(
         f"{_sql_dbl(prior_s)}"
         f" + coalesce(__s{i}, 0.0D)"
         f" + (__n - coalesce(__p{i}, 0.0D)) * {_sql_dbl(lnp0_s)}"
-        f"), 'l', {_sql_str(c)})"
+        f"), 'l', {sql_str(c)})"
         for i, (c, prior_s, lnp0_s) in enumerate(cls_rows)
     )
     return scored.select(

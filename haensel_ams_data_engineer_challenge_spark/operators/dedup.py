@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..checkpoint import materialize
+from ..functions.sqlexpr import sql_ref, sql_str
 from ..functions.text import word_shingles
 
 MINHASH_K = 12
@@ -357,9 +358,9 @@ def substring_dup_pairs(
     """
     # chunk starts 1, 1+chunk, ... <= n_grams; docs shorter than one
     # gram produce no chunk rows at all.  Both explodes parse as ONE
-    # expr string each (round 16, guide §5 — same trees the Column
-    # lambdas built, ~100 fewer py4j round-trips per build).
-    n_grams = f"greatest(length({text_col}) - {gram - 1}, 0)"
+    # expr string each (~100 fewer py4j round-trips per build).
+    text = sql_ref(text_col)
+    n_grams = f"greatest(length({text}) - {gram - 1}, 0)"
     chunks = df.select(
         F.col(id_col),
         F.explode(F.expr(
@@ -367,20 +368,19 @@ def substring_dup_pairs(
             f"sequence(1, {n_grams}, {chunk}) "
             f"ELSE CAST(array() AS ARRAY<INT>) END, "
             f"s0 -> named_struct('c0', s0, "
-            f"'ct', substr({text_col}, s0, {chunk + gram - 1})))"
+            f"'ct', substr({text}, s0, {chunk + gram - 1})))"
         )).alias("ch"),
     )
     # local gram starts within this chunk: 1..min(chunk, n_grams-c0+1);
     # >= 1 by construction (a chunk row exists only when c0 <= n_grams),
     # so the ascending sequence is safe.  The anchor predicate runs
     # DURING the filter — gram strings are transient, never an array.
-    pfx = anchor_prefix.replace("\\", "\\\\").replace("'", "\\'")
     occ = chunks.select(
         F.col(id_col),
         F.explode(F.expr(
             f"transform(filter(sequence(1, length(ch.ct) - {gram - 1}), "
             f"i -> substring(md5(substr(ch.ct, i, {gram})), 1, "
-            f"{len(anchor_prefix)}) = '{pfx}'), "
+            f"{len(anchor_prefix)}) = {sql_str(anchor_prefix)}), "
             f"i -> named_struct("
             f"'off', CAST(ch.c0 + i - 1 AS BIGINT), "
             f"'s', substr(ch.ct, i, {gram})))"
@@ -765,13 +765,13 @@ def cut_spans(
     # span with s >= pos opens a new island (emits the gap before it);
     # one with s < pos overlaps or is contained (gap length clamps to
     # 0, pos only ever advances).
-    # The clamp + fold parse as ONE expr string (round 16, guide §5 —
-    # identical tree to the Column-lambda form it replaces).
+    # The clamp + fold parse as ONE expr string.
+    text = sql_ref(text_col)
     ivs = (
         "filter(transform(__ivs, iv -> named_struct("
         "'s', greatest(CAST(iv.s AS BIGINT), CAST(1 AS BIGINT)), "
         f"'e', least(CAST(iv.e AS BIGINT), "
-        f"CAST(length({text_col}) AS BIGINT)))), "
+        f"CAST(length({text}) AS BIGINT)))), "
         "iv -> iv.s <= iv.e)"
     )
     folded = F.expr(
@@ -779,13 +779,13 @@ def cut_spans(
         "named_struct('txt', '', 'pos', CAST(1 AS BIGINT), "
         "'n', CAST(0 AS BIGINT)), "
         "(acc, iv) -> named_struct("
-        f"'txt', concat(acc.txt, substr({text_col}, acc.pos, "
+        f"'txt', concat(acc.txt, substr({text}, acc.pos, "
         "greatest(iv.s - acc.pos, 0))), "
         "'pos', greatest(acc.pos, iv.e + 1), "
         "'n', acc.n + CAST(iv.s >= acc.pos AS BIGINT)), "
         "acc -> named_struct("
-        f"'txt', concat(acc.txt, substr({text_col}, acc.pos, "
-        f"greatest(length({text_col}) - acc.pos + 1, 0))), "
+        f"'txt', concat(acc.txt, substr({text}, acc.pos, "
+        f"greatest(length({text}) - acc.pos + 1, 0))), "
         "'n', acc.n))"
     )
     return joined.withColumn("__folded", folded).select(

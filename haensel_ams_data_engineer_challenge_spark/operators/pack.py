@@ -37,6 +37,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..attribution import model as M
+from ..functions.sqlexpr import sql_ref, sql_str
 
 MAX_JOURNEYS = 100
 MAX_SESSIONS = 200
@@ -327,11 +328,11 @@ def chunk_sequences(
     from ..functions.text import BPE_ISH_PATTERN
 
     step = seq_len - overlap
-    # single-parse expr string (round 16, guide §5) — same tree the
-    # Column lambdas built; `toks` repeats textually exactly as the
-    # Column form duplicated its subtree per reference
-    pat = BPE_ISH_PATTERN.replace("\\", "\\\\").replace("'", "\\'")
-    toks = f"regexp_extract_all({text_col}, '{pat}', 0)"
+    # single-parse expr string; `toks` repeats textually, once per use
+    toks = (
+        f"regexp_extract_all({sql_ref(text_col)}, "
+        f"{sql_str(BPE_ISH_PATTERN)}, 0)"
+    )
     chunk_s = (
         "named_struct("
         f"'chunk_idx', CAST((s - 1) / {step} AS BIGINT), "

@@ -21,6 +21,7 @@ import weakref
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..functions.sqlexpr import sql_ref
 from ..session import ensure_engine_confs
 
 TESTDATA_TABLES = (
@@ -113,7 +114,10 @@ def load_table(
             # identity under the UTC session timezone.
             df = df.withColumn(
                 col,
-                F.expr(f"cast(timestamp_micros({col} div 1000) as timestamp_ntz)"),
+                F.expr(
+                    f"cast(timestamp_micros({sql_ref(col)} div 1000) "
+                    "as timestamp_ntz)"
+                ),
             )
     if spread is None:
         spread = name in _SPREAD_TABLES

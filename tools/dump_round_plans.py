@@ -1,11 +1,14 @@
-"""Dump `.explain("formatted")` for every bench HEADLINE entry into
-plans/r16/<name>_<tag>.txt (tag = before/after).
+"""Dump `.explain("formatted")` for registry entries into
+plans/<round>/<name>_<tag>.txt (tag = before/after, say).
 
-Usage: python tools/dump_r16_plans.py <tag> [entry ...]
+Usage: python tools/dump_round_plans.py <round> <tag> <sf_dir> [entry ...]
 
-Plans are captured at sf0.1 (the driver's bench SF) pre-execution —
-the optimization round's evidence files: Exchange count, join
+With no entry names every registry entry is dumped.  Plans are captured
+pre-execution — a change's evidence files: Exchange count, join
 strategy, PushedFilters/ReadSchema, codegen spans, Arrow/Python nodes.
+Session counters (expression ``#N``, ``plan_id=N``, ``RDD[N]``, the
+``spark-warehouse-<pid>`` dir) differ between runs; normalize them
+before diffing a before/after pair.
 """
 
 from __future__ import annotations
@@ -20,18 +23,16 @@ from haensel_ams_data_engineer_challenge_spark.session import get_spark
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    sf_dir = "/root/testdata/sf0.1"
-    out_dir = Path(__file__).resolve().parent.parent / "plans" / "r16"
+    if len(sys.argv) < 4:
+        sys.exit(__doc__)
+    round_label, tag, sf_dir = sys.argv[1:4]
+    out_dir = Path(__file__).resolve().parent.parent / "plans" / round_label
     out_dir.mkdir(parents=True, exist_ok=True)
 
-    import bench
-
-    spark = get_spark("dump_r16_plans")
+    spark = get_spark(f"dump_{round_label}_plans")
     spark.sparkContext.setLogLevel("ERROR")
     reg = registry()
-    names = sys.argv[2:] or [n for n in bench.HEADLINE if n in reg]
-    for name in names:
+    for name in sys.argv[4:] or list(reg):
         df = reg[name][0](spark, sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
