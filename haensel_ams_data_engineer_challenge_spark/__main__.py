@@ -77,8 +77,9 @@ def _parser() -> argparse.ArgumentParser:
         "lease-guarded parquet appends; 'manifest' = manifest-committed "
         "sink (round 11) — each run's rows become visible atomically "
         "and --compact-sink never leaves a window where readers see "
-        "the sink missing (legacy swap sinks are adopted in place; "
-        "do not switch a manifest sink back to swap)",
+        "the sink missing (legacy swap sinks are adopted in place).  "
+        "The protocol applies to a path with no manifest yet; a "
+        "manifest sink stays manifest",
     )
     run.add_argument(
         "--retention-minutes", type=float, default=None, metavar="M",
@@ -686,8 +687,9 @@ def _parser() -> argparse.ArgumentParser:
                     "'manifest' commits each micro-batch's rows with "
                     "one atomic manifest rename — concurrent readers "
                     "always see a complete committed row set, and "
-                    "--compact-sink never vacates the path; do not "
-                    "switch a manifest sink back to swap")
+                    "--compact-sink never vacates the path.  The "
+                    "protocol applies to a path with no manifest yet; "
+                    "a manifest sink stays manifest")
     ig.add_argument(
         "--retention-minutes", type=float, default=None, metavar="M",
         help="(manifest protocol) vacuum time floor — see pipeline "
@@ -754,7 +756,8 @@ def _parser() -> argparse.ArgumentParser:
         help="admitted-vector store commit protocol (round 12): "
         "'manifest' makes each batch visible at one atomic manifest "
         "rename (readers never see a partial append); 'swap' is the "
-        "pre-round-12 keyed insert",
+        "pre-round-12 keyed insert.  The protocol applies to a path "
+        "with no manifest yet; a manifest sink stays manifest",
     )
 
     im = sub.add_parser(
@@ -792,7 +795,9 @@ def _parser() -> argparse.ArgumentParser:
     im.add_argument(
         "--sink-protocol", choices=("swap", "manifest"), default="swap",
         help="admitted-media store commit protocol: 'manifest' makes "
-        "each batch visible at one atomic manifest rename",
+        "each batch visible at one atomic manifest rename.  The "
+        "protocol applies to a path with no manifest yet; a manifest "
+        "sink stays manifest",
     )
 
     mx = sub.add_parser(
@@ -891,6 +896,26 @@ def _payload_dedup_tiers(
     return surv, tier_counts
 
 
+def _retention_minutes(args) -> float:
+    """``--retention-minutes``, defaulting to the manifest vacuum's
+    30-minute floor (round 13)."""
+    from .operators.manifest_sink import DEFAULT_RETENTION_MINUTES
+
+    if args.retention_minutes is None:
+        return DEFAULT_RETENTION_MINUTES
+    return args.retention_minutes
+
+
+def _print_admitted_total(spark, sink: str) -> None:
+    """The ingest commands' closing line; a drain with no writing batch
+    (empty feed) leaves no sink at all, which counts as 0."""
+    from .operators.sinks import try_read_sink
+
+    committed = try_read_sink(spark, sink)
+    n = committed.count() if committed is not None else 0
+    print(f"admitted_total={n} sink={sink}")
+
+
 def main(argv: list[str] | None = None) -> int:
     args = _parser().parse_args(argv)
     from .session import get_spark
@@ -941,25 +966,13 @@ def main(argv: list[str] | None = None) -> int:
                 sink_protocol=args.sink_protocol,
             )
             if args.compact_sink:
-                sink_path = f"{args.work_dir}/attribution_customer_journey"
-                if args.sink_protocol == "manifest":
-                    from .operators.manifest_sink import (
-                        DEFAULT_RETENTION_MINUTES,
-                        manifest_compact,
-                    )
+                from .operators.sinks import compact_parquet_sink
 
-                    n_compacted = manifest_compact(
-                        spark, sink_path,
-                        min_retention_minutes=(
-                            args.retention_minutes
-                            if args.retention_minutes is not None
-                            else DEFAULT_RETENTION_MINUTES
-                        ),
-                    )
-                else:
-                    from .operators.sinks import compact_parquet_sink
-
-                    n_compacted = compact_parquet_sink(spark, sink_path)
+                n_compacted = compact_parquet_sink(
+                    spark, f"{args.work_dir}/attribution_customer_journey",
+                    sink_protocol=args.sink_protocol,
+                    min_retention_minutes=_retention_minutes(args),
+                )
                 print(f"compacted_rows={n_compacted}")
             print(
                 f"conversions={result.conversions_total} "
@@ -2132,47 +2145,24 @@ def main(argv: list[str] | None = None) -> int:
                 ),
                 unicode_normalize=not args.no_unicode_normalize,
             )
-            from .operators.manifest_sink import DEFAULT_RETENTION_MINUTES
-
-            retention = (
-                args.retention_minutes
-                if args.retention_minutes is not None
-                else DEFAULT_RETENTION_MINUTES
-            )
             if args.compact_index and args.near_dup:
                 from .operators.minhash_index import minhash_index_compact
 
                 n_bands = minhash_index_compact(
                     spark, f"{args.work_dir}/minhash_index",
-                    min_retention_minutes=retention,
+                    min_retention_minutes=_retention_minutes(args),
                 )
                 print(f"compacted_bands={n_bands}")
             if args.compact_sink:
-                if args.sink_protocol == "manifest":
-                    from .operators.manifest_sink import manifest_compact
+                from .operators.sinks import compact_parquet_sink
 
-                    n_rows = manifest_compact(
-                        spark, sink, min_retention_minutes=retention,
-                    )
-                else:
-                    from .operators.sinks import compact_parquet_sink
-
-                    n_rows = compact_parquet_sink(spark, sink)
-                print(f"compacted_rows={n_rows}")
-            if args.sink_protocol == "manifest":
-                from .operators.manifest_sink import read_manifest_sink
-
-                committed = read_manifest_sink(spark, sink)
-                # no manifest yet (legacy sink + no writing batch this
-                # drain): count the plain listing, as before
-                n = (
-                    committed.count()
-                    if committed is not None
-                    else spark.read.parquet(sink).count()
+                n_rows = compact_parquet_sink(
+                    spark, sink,
+                    sink_protocol=args.sink_protocol,
+                    min_retention_minutes=_retention_minutes(args),
                 )
-            else:
-                n = spark.read.parquet(sink).count()
-            print(f"admitted_total={n} sink={sink}")
+                print(f"compacted_rows={n_rows}")
+            _print_admitted_total(spark, sink)
             return 0
 
         if args.command == "ingest-vectors":
@@ -2196,13 +2186,7 @@ def main(argv: list[str] | None = None) -> int:
                 max_files_per_trigger=args.max_files_per_trigger,
                 sink_protocol=args.sink_protocol,
             )
-            if args.sink_protocol == "manifest":
-                from .operators.manifest_sink import read_manifest_sink
-
-                n = read_manifest_sink(spark, sink).count()
-            else:
-                n = spark.read.parquet(sink).count()
-            print(f"admitted_total={n} sink={sink}")
+            _print_admitted_total(spark, sink)
             return 0
 
         if args.command == "ingest-media":
@@ -2245,17 +2229,7 @@ def main(argv: list[str] | None = None) -> int:
                 max_files_per_trigger=args.max_files_per_trigger,
                 sink_protocol=args.sink_protocol,
             )
-            if args.sink_protocol == "manifest":
-                from .operators.manifest_sink import read_manifest_sink
-
-                committed = read_manifest_sink(spark, sink)
-            else:
-                from .streaming.ingest import _try_read
-
-                committed = _try_read(spark, sink)
-            # zero writing batches (empty feed) leaves no sink at all
-            n = committed.count() if committed is not None else 0
-            print(f"admitted_total={n} sink={sink}")
+            _print_admitted_total(spark, sink)
             return 0
 
         if args.command == "mix":

@@ -48,13 +48,11 @@ from pyspark.sql.types import StructType
 from .manifest_sink import (
     _commit_json,
     _data_files,
-    _fs,
-    _jpath,
     _list_names,
     _manifest_versions,
     _read_manifest,
 )
-from .sinks import hold_writer_lease
+from .sinks import _hadoop_fs, hold_writer_lease
 
 
 def artifact_resolve(
@@ -118,20 +116,20 @@ def _stage_table(
     this job wrote; nothing is visible until the manifest commit."""
     stage = f"{path}/.stage_{uuid.uuid4().hex}"
     df.write.mode("overwrite").parquet(stage)
-    jvm, fs = _fs(spark, path)
-    fs.mkdirs(_jpath(jvm, f"{path}/{table}"))
+    fs, hpath = _hadoop_fs(spark, path)
+    fs.mkdirs(hpath(f"{path}/{table}"))
     staged = sorted(_data_files(_list_names(spark, stage)))
     for name in staged:
         if not fs.rename(
-            _jpath(jvm, f"{stage}/{name}"),
-            _jpath(jvm, f"{path}/{table}/{name}"),
+            hpath(f"{stage}/{name}"),
+            hpath(f"{path}/{table}/{name}"),
         ):
-            fs.delete(_jpath(jvm, stage), True)
+            fs.delete(hpath(stage), True)
             raise IOError(
                 f"artifact commit: failed to move staged file {name} "
                 f"into {path}/{table}"
             )
-    fs.delete(_jpath(jvm, stage), True)
+    fs.delete(hpath(stage), True)
     return staged, df.schema.jsonValue()
 
 
@@ -156,11 +154,11 @@ def artifact_vacuum(
     if min_retention_minutes > 0:
         import time
 
-        jvm0, fs0 = _fs(spark, path)
+        fs0, hpath0 = _hadoop_fs(spark, path)
         floor_ms = (time.time() - min_retention_minutes * 60.0) * 1000.0
         for v in versions[:-2]:
             st = fs0.getFileStatus(
-                _jpath(jvm0, f"{path}/_manifest_v{v:012d}.json")
+                hpath0(f"{path}/_manifest_v{v:012d}.json")
             )
             if st.getModificationTime() >= floor_ms:
                 keep_versions.add(v)
@@ -171,21 +169,21 @@ def artifact_vacuum(
         for t, entry in man.get("tables", {}).items():
             tables.add(t)
             referenced.update(f"{t}/{n}" for n in entry["files"])
-    jvm, fs = _fs(spark, path)
+    fs, hpath = _hadoop_fs(spark, path)
     deleted = 0
     for n in names:
         if n.startswith((".manifest_tmp_", ".stage_")):
-            fs.delete(_jpath(jvm, f"{path}/{n}"), True)
+            fs.delete(hpath(f"{path}/{n}"), True)
             deleted += 1
             continue
         mm = re.match(r"^_manifest_v(\d{12})\.json$", n)
         if mm and int(mm.group(1)) not in keep_versions:
-            fs.delete(_jpath(jvm, f"{path}/{n}"), False)
+            fs.delete(hpath(f"{path}/{n}"), False)
             deleted += 1
     for t in tables:
         for n in _list_names(spark, f"{path}/{t}"):
             if n in _data_files([n]) and f"{t}/{n}" not in referenced:
-                fs.delete(_jpath(jvm, f"{path}/{t}/{n}"), False)
+                fs.delete(hpath(f"{path}/{t}/{n}"), False)
                 deleted += 1
     return deleted
 
@@ -214,8 +212,8 @@ def _adopt_legacy(
 
 
 def _drop_legacy_marker(spark: SparkSession, path: str) -> None:
-    jvm, fs = _fs(spark, path)
-    fs.delete(_jpath(jvm, f"{path}/params"), True)
+    fs, hpath = _hadoop_fs(spark, path)
+    fs.delete(hpath(f"{path}/params"), True)
 
 
 def artifact_adopt(

@@ -63,6 +63,13 @@ writer interleaves):
 Single-writer is enforced by the same lease as the swap sink
 (:func:`.sinks.hold_writer_lease`); readers take no lease.
 
+Callers do not pick between the two layouts: ``sinks.try_read_sink``,
+``sinks.insert_if_absent`` and ``sinks.compact_parquet_sink`` detect a
+manifest at the path and route here, so a manifest sink stays manifest
+whichever ``sink_protocol`` is passed — a swap write could otherwise
+land files no manifest reader sees, which the next vacuum deletes.  The
+requested protocol decides only for a path with no manifest yet.
+
 The reference analogue is still SQLite's single-file atomicity
 (db_utils.py:185-225) — this is what that guarantee costs on a
 distributed object store.
@@ -73,10 +80,15 @@ from __future__ import annotations
 import json
 import re
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from .sinks import hold_writer_lease
+from .sinks import (
+    _fresh_rows,
+    _hadoop_fs,
+    _write_counted,
+    hold_writer_lease,
+)
 
 _MANIFEST_RE = re.compile(r"^_manifest_v(\d{12})\.json$")
 
@@ -86,20 +98,10 @@ _MANIFEST_RE = re.compile(r"^_manifest_v(\d{12})\.json$")
 DEFAULT_RETENTION_MINUTES = 30.0
 
 
-def _fs(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-
-
-def _jpath(jvm, path: str):
-    return jvm.org.apache.hadoop.fs.Path(path)
-
-
 def _list_names(spark: SparkSession, path: str) -> list[str]:
     """Basenames in the sink dir ([] when the dir does not exist)."""
-    jvm, fs = _fs(spark, path)
-    p = _jpath(jvm, path)
+    fs, hpath = _hadoop_fs(spark, path)
+    p = hpath(path)
     if not fs.exists(p):
         return []
     return [st.getPath().getName() for st in fs.listStatus(p)]
@@ -127,11 +129,11 @@ def _manifest_name(version: int) -> str:
 
 
 def _read_manifest(spark: SparkSession, path: str, version: int) -> dict:
-    jvm, fs = _fs(spark, path)
-    p = _jpath(jvm, f"{path}/{_manifest_name(version)}")
-    stream = fs.open(p)
+    fs, hpath = _hadoop_fs(spark, path)
+    io = spark.sparkContext._jvm.org.apache.commons.io
+    stream = fs.open(hpath(f"{path}/{_manifest_name(version)}"))
     try:
-        raw = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        raw = io.IOUtils.toString(stream, "UTF-8")
     finally:
         stream.close()
     return json.loads(raw)
@@ -146,15 +148,15 @@ def _commit_json(spark: SparkSession, path: str, version: int, body: dict) -> No
     artifact manifest (artifact_manifest.py)."""
     import uuid
 
-    jvm, fs = _fs(spark, path)
+    fs, hpath = _hadoop_fs(spark, path)
     raw = json.dumps(body, sort_keys=True)
     tmp = f"{path}/.manifest_tmp_{uuid.uuid4().hex}"
-    out = fs.create(_jpath(jvm, tmp), False)
+    out = fs.create(hpath(tmp), False)
     out.write(bytearray(raw.encode("utf-8")))
     out.close()
     final = f"{path}/{_manifest_name(version)}"
-    if not fs.rename(_jpath(jvm, tmp), _jpath(jvm, final)):
-        fs.delete(_jpath(jvm, tmp), False)
+    if not fs.rename(hpath(tmp), hpath(final)):
+        fs.delete(hpath(tmp), False)
         raise IOError(
             f"manifest commit failed: could not rename to {final} "
             "(a manifest with this version already exists — was the "
@@ -193,7 +195,7 @@ def _resolve_latest(
 def read_manifest_sink(spark: SparkSession, path: str) -> DataFrame | None:
     """The manifest sink's read path: resolve the latest manifest and
     read EXACTLY its files.  Returns None when no manifest was ever
-    committed (use the plain parquet reader for legacy sinks); an
+    committed (``sinks.try_read_sink`` then reads the plain listing); an
     empty committed file list returns an empty DataFrame with the
     manifest's recorded schema.  Readers take no lease: resolution is
     one atomic listing, and superseded files survive one further
@@ -232,13 +234,13 @@ def manifest_vacuum(
     if not versions:
         return 0
     keep_versions = set(versions[-2:])
-    jvm, fs = _fs(spark, path)
+    fs, hpath = _hadoop_fs(spark, path)
     if min_retention_minutes > 0:
         import time
 
         floor_ms = (time.time() - min_retention_minutes * 60.0) * 1000.0
         for v in versions[:-2]:
-            st = fs.getFileStatus(_jpath(jvm, f"{path}/{_manifest_name(v)}"))
+            st = fs.getFileStatus(hpath(f"{path}/{_manifest_name(v)}"))
             if st.getModificationTime() >= floor_ms:
                 keep_versions.add(v)
     referenced: set[str] = set()
@@ -256,7 +258,7 @@ def manifest_vacuum(
             if m and int(m.group(1)) not in keep_versions:
                 doomed = True
         if doomed:
-            fs.delete(_jpath(jvm, f"{path}/{n}"), False)
+            fs.delete(hpath(f"{path}/{n}"), False)
             deleted += 1
     return deleted
 
@@ -275,35 +277,30 @@ def _move_staged_files(spark: SparkSession, stage: str, path: str) -> list[str]:
     EXPLICIT record of what this job wrote.  All moves happen before
     any manifest commit, so a failure here is pre-commit: nothing is
     visible, the staging dir is deleted, and the caller dies clean."""
-    jvm, fs = _fs(spark, path)
+    fs, hpath = _hadoop_fs(spark, path)
     staged = sorted(_data_files(_list_names(spark, stage)))
     for name in staged:
-        if not fs.rename(
-            _jpath(jvm, f"{stage}/{name}"), _jpath(jvm, f"{path}/{name}")
-        ):
-            fs.delete(_jpath(jvm, stage), True)
+        if not fs.rename(hpath(f"{stage}/{name}"), hpath(f"{path}/{name}")):
+            fs.delete(hpath(stage), True)
             raise IOError(
                 f"manifest commit: failed to move staged file {name} "
                 f"into {path}"
             )
-    fs.delete(_jpath(jvm, stage), True)
+    fs.delete(hpath(stage), True)
     return staged
 
 
-def _adopt_or_latest(
-    spark: SparkSession, path: str
-) -> tuple[int, list[str], StructType | None]:
-    """(latest_version, committed_files, schema) — adopting a LEGACY
-    sink (data files but no manifest: a pre-manifest insert_if_absent
-    sink) by treating every current data file as committed content of
-    an implicit version 0.  Returns version 0 with the adopted list;
-    the caller's commit then writes v1 including them."""
+def _adopt_or_latest(spark: SparkSession, path: str) -> tuple[int, list[str]]:
+    """(latest_version, committed_files) — adopting a LEGACY sink (data
+    files but no manifest: a pre-manifest insert_if_absent sink) by
+    treating every current data file as committed content of an
+    implicit version 0.  Returns version 0 with the adopted list; the
+    caller's commit then writes v1 including them."""
     got = _resolve_latest(spark, path)
     if got is not None:
         v, man = got
-        return v, list(man["files"]), StructType.fromJson(man["schema"])
-    legacy = sorted(_data_files(_list_names(spark, path)))
-    return 0, legacy, None
+        return v, list(man["files"])
+    return 0, sorted(_data_files(_list_names(spark, path)))
 
 
 def manifest_insert_if_absent(
@@ -312,6 +309,7 @@ def manifest_insert_if_absent(
     path: str,
     keys: list[str],
     min_retention_minutes: float = 0.0,
+    lease_wait_ms: int = 0,
 ) -> int:
     """INSERT OR IGNORE with a manifest commit — the exact semantics of
     :func:`.sinks.insert_if_absent` (dedup within the batch, NULL keys
@@ -328,16 +326,13 @@ def manifest_insert_if_absent(
 
     A legacy swap-sink at ``path`` (data, no manifest) is ADOPTED: its
     current files become the first manifest's base content, so
-    existing pipelines upgrade in place."""
+    existing pipelines upgrade in place.  ``lease_wait_ms`` is
+    :func:`.sinks.hold_writer_lease`'s ``wait_ms``."""
     import uuid
 
-    from pyspark.sql import Observation
-
-    fresh = df.dropDuplicates(keys)
-    for k in keys:
-        fresh = fresh.filter(F.col(k).isNotNull())
-    with hold_writer_lease(spark, path):
-        version, committed, schema = _adopt_or_latest(spark, path)
+    fresh = _fresh_rows(df, keys)
+    with hold_writer_lease(spark, path, wait_ms=lease_wait_ms):
+        version, committed = _adopt_or_latest(spark, path)
         if version > 0:
             manifest_vacuum(spark, path, min_retention_minutes)
             # vacuum never touches the latest two manifests' files, so
@@ -348,14 +343,7 @@ def manifest_insert_if_absent(
             )
             fresh = fresh.join(existing.select(*keys), keys, "left_anti")
         stage = f"{path}__append_{uuid.uuid4().hex}"
-        obs = Observation()
-        # REBALANCE before the staged write (guide §6, same as
-        # insert_if_absent): size the appended files to AQE's advisory
-        # target instead of one fragment per upstream partition
-        fresh.hint("rebalance").observe(
-            obs, F.count(F.lit(1)).alias("n")
-        ).write.mode("overwrite").parquet(stage)
-        n = int(obs.get["n"])
+        n = _write_counted(fresh, stage, "overwrite")
         new_files = _move_staged_files(spark, stage, path)
         _commit_manifest(
             spark, path, version + 1, committed + new_files, fresh.schema
@@ -387,10 +375,8 @@ def manifest_compact(
     rows); a path with no manifest and no data still raises."""
     import uuid
 
-    from pyspark.sql import Observation
-
     with hold_writer_lease(spark, path):
-        version, committed, schema = _adopt_or_latest(spark, path)
+        version, committed = _adopt_or_latest(spark, path)
         if not committed:
             if version > 0:
                 # committed-but-empty: nothing to rewrite, nothing to
@@ -408,19 +394,8 @@ def manifest_compact(
             )
         manifest_vacuum(spark, path, min_retention_minutes)
         rows = spark.read.parquet(*[f"{path}/{n}" for n in committed])
-        # default layout: size-targeted REBALANCE (round 16, same as
-        # sinks.compact_parquet_sink — the fixed shuffle.partitions
-        # default would fragment an already-compact generation)
-        if target_partitions is not None:
-            rows = rows.repartition(int(target_partitions))
-        else:
-            rows = rows.hint("rebalance")
         stage = f"{path}__stage_{uuid.uuid4().hex}"
-        obs = Observation()
-        rows.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-            "overwrite"
-        ).parquet(stage)
-        n_rows = int(obs.get["n"])
+        n_rows = _write_counted(rows, stage, "overwrite", target_partitions)
         staged = _move_staged_files(spark, stage, path)
         _commit_manifest(spark, path, version + 1, staged, rows.schema)
         # same-session readers may hold a cached listing of the path

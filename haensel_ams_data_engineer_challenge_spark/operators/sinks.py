@@ -44,42 +44,82 @@ ATTRIBUTION_DDL: dict[str, str] = {
 
 
 #: AnalysisException conditions meaning "no data here yet" — the only
-#: ones sink-existence probes may tolerate (the streaming/ingest.py
-#: round-7 discipline; anything else re-raises).
+#: ones the sink reader may tolerate (the round-7 streaming-ingest
+#: discipline; anything else re-raises).
 _MISSING_SINK = {"PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"}
 
 
-def hadoop_path_exists(spark: SparkSession, path: str) -> bool:
-    """Scheme-aware existence probe through the Hadoop FileSystem API
-    (works on HDFS/S3/ABFS exactly like the reads do — NOT os.path,
-    which is always False off-box; round-6 ingest lesson)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
+def check_sink_protocol(sink_protocol: str) -> None:
+    """Raise ValueError unless ``sink_protocol`` names one of the two
+    on-disk layouts: ``swap`` = plain lease-guarded parquet appends
+    (compaction swaps the directory), ``manifest`` = the versioned file
+    list of operators/manifest_sink.py.  The requested protocol applies
+    only to a path with no manifest yet — a manifest sink stays
+    manifest (:func:`_uses_manifest`).  Callers run this before their
+    first Spark job."""
+    if sink_protocol not in ("swap", "manifest"):
+        raise ValueError(
+            f"sink_protocol must be 'swap' or 'manifest', got {sink_protocol!r}"
+        )
 
 
-def try_read_sink(spark: SparkSession, path: str) -> DataFrame | None:
-    """Probe a sink THROUGH the Hadoop FileSystem, not os.path: on
+def _hadoop_fs(spark: SparkSession, path: str):
+    """(FileSystem, hpath) for ``path``: the scheme-aware Hadoop
+    FileSystem the reads use (HDFS/S3/ABFS alike — NOT os.path, which
+    is always False off-box; round-6 ingest lesson) and the
+    ``org.apache.hadoop.fs.Path`` constructor for paths on it."""
+    sc = spark.sparkContext
+    hpath = sc._jvm.org.apache.hadoop.fs.Path
+    return hpath(path).getFileSystem(sc._jsc.hadoopConfiguration()), hpath
+
+
+def _uses_manifest(spark: SparkSession, path: str, sink_protocol: str) -> bool:
+    """True when ``path`` is written through the manifest protocol:
+    the caller asked for it, or the path is already manifest-committed
+    whatever was asked — swap-protocol files there would be invisible
+    to manifest readers and deleted by the next manifest vacuum
+    (round 11).  Probed before the writer lease is taken."""
+    check_sink_protocol(sink_protocol)
+    if sink_protocol == "manifest":
+        return True
+    from .manifest_sink import _list_names, _manifest_versions
+
+    return bool(_manifest_versions(_list_names(spark, path)))
+
+
+def try_read_sink(
+    spark: SparkSession, path: str, schema: StructType | None = None
+) -> DataFrame | None:
+    """The one sink reader.  Returns the manifest-committed rows when
+    ``path`` holds a manifest (operators/manifest_sink.py), else the
+    plain parquet listing (read with ``schema`` when given), else None
+    when the path holds no data yet; an existing-yet-unreadable sink
+    re-raises.
+
+    The probe goes THROUGH the Hadoop FileSystem, not os.path: on
     HDFS/S3/ABFS a driver-local ``isdir()`` is always False, silently
     disabling every existence-dependent behavior (round-6 ingest
-    lesson, applied to the batch sinks in round 9).  Returns the
-    DataFrame when readable, None when the path holds no data yet; an
-    existing-yet-unreadable sink re-raises.
-
-    The missing-path case is decided by ``fs.exists`` rather than by
-    catching PATH_NOT_FOUND from a speculative read: the failed read
-    costs a full listing attempt and the JVM logs its AnalysisException
-    stack trace to stderr even though Python catches it (the r15
-    bench-tail py4j trace — r15 verdict item 3).  The read+catch stays
-    for the exists-but-empty case (UNABLE_TO_INFER_SCHEMA) and as a
-    race guard."""
+    lesson, applied to the batch sinks in round 9).  The missing-path
+    case is decided by ``fs.exists`` rather than by catching
+    PATH_NOT_FOUND from a speculative read: the failed read costs a
+    full listing attempt and the JVM logs its AnalysisException stack
+    trace to stderr even though Python catches it (the r15 bench-tail
+    py4j trace — r15 verdict item 3).  The read+catch stays for the
+    exists-but-empty case (UNABLE_TO_INFER_SCHEMA) and as a race
+    guard."""
     from pyspark.errors import AnalysisException
 
-    if not hadoop_path_exists(spark, path):
+    from .manifest_sink import read_manifest_sink
+
+    fs, hpath = _hadoop_fs(spark, path)
+    if not fs.exists(hpath(path)):
         return None
+    committed = read_manifest_sink(spark, path)
+    if committed is not None:
+        return committed
     try:
-        df = spark.read.parquet(path)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        df = reader.parquet(path)
         df.schema  # force resolution so missing paths surface here
         return df
     except AnalysisException as e:
@@ -120,22 +160,6 @@ class ConcurrentWriterError(RuntimeError):
     of racing the read->anti-join->append window (round 10)."""
 
 
-def _refuse_manifest_sink(spark: SparkSession, path: str, alt: str) -> None:
-    """Round 11: a sink that has been manifest-committed
-    (operators/manifest_sink.py) must never be written through the
-    plain swap protocol — the appended files would be invisible to
-    manifest readers and DELETED by the next manifest vacuum.  Mixing
-    protocols is a caller error; fail loudly with the right tool."""
-    from .manifest_sink import _manifest_versions, _list_names
-
-    if _manifest_versions(_list_names(spark, path)):
-        raise ValueError(
-            f"sink at {path} is manifest-committed; use {alt} "
-            "(operators/manifest_sink.py) — swap-protocol writes would "
-            "be invisible to manifest readers and vacuumed away"
-        )
-
-
 #: a lease older than this is presumed abandoned (crashed writer) and
 #: may be taken over.  Generous: longer than any sane insert, far
 #: shorter than an operator's pager response.
@@ -154,12 +178,6 @@ _LEASE_SUFFIX = "__lease"
 
 def _lease_path(path: str) -> str:
     return path.rstrip("/") + _LEASE_SUFFIX
-
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, p, p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
 
 
 class HadoopLeaseBackend:
@@ -186,21 +204,13 @@ class HadoopLeaseBackend:
 
     def __init__(self, spark: SparkSession):
         self._spark = spark
-        self._jvm = spark.sparkContext._jvm
-        self._conf = spark.sparkContext._jsc.hadoopConfiguration()
-
-    def _p(self, path: str):
-        return self._jvm.org.apache.hadoop.fs.Path(path)
-
-    def _fs(self, path: str):
-        return self._p(path).getFileSystem(self._conf)
 
     def create_exclusive(self, path: str, token: str) -> bool:
         from py4j.protocol import Py4JJavaError
 
-        p, fs = self._p(path), self._fs(path)
+        fs, hpath = _hadoop_fs(self._spark, path)
         try:
-            out = fs.create(p, False)
+            out = fs.create(hpath(path), False)
             out.write(bytearray(token.encode("utf-8")))
             out.close()
             return True
@@ -210,36 +220,41 @@ class HadoopLeaseBackend:
             return False
 
     def stat_mtime_ms(self, path: str) -> int | None:
-        p, fs = self._p(path), self._fs(path)
+        fs, hpath = _hadoop_fs(self._spark, path)
+        p = hpath(path)
         if not fs.exists(p):
             return None
         return int(fs.getFileStatus(p).getModificationTime())
 
     def read_token(self, path: str) -> str | None:
-        p, fs = self._p(path), self._fs(path)
+        fs, hpath = _hadoop_fs(self._spark, path)
+        p = hpath(path)
         if not fs.exists(p):
             return None
+        io = self._spark.sparkContext._jvm.org.apache.commons.io
         stream = fs.open(p)
         try:
-            return self._jvm.org.apache.commons.io.IOUtils.toString(
-                stream, "UTF-8"
-            )
+            return io.IOUtils.toString(stream, "UTF-8")
         finally:
             stream.close()
 
     def rename(self, src: str, dst: str) -> bool:
-        fs = self._fs(src)
-        return bool(fs.rename(self._p(src), self._p(dst)))
+        fs, hpath = _hadoop_fs(self._spark, src)
+        return bool(fs.rename(hpath(src), hpath(dst)))
 
     def delete(self, path: str) -> None:
-        self._fs(path).delete(self._p(path), False)
+        fs, hpath = _hadoop_fs(self._spark, path)
+        fs.delete(hpath(path), False)
 
     def touch(self, path: str) -> None:
         # setTimes(mtime, atime); atime=-1 leaves access time unchanged
-        self._fs(path).setTimes(self._p(path), self.now_ms(), -1)
+        fs, hpath = _hadoop_fs(self._spark, path)
+        fs.setTimes(hpath(path), self.now_ms(), -1)
 
     def now_ms(self) -> int:
-        return int(self._jvm.java.lang.System.currentTimeMillis())
+        return int(
+            self._spark.sparkContext._jvm.java.lang.System.currentTimeMillis()
+        )
 
 
 def _lease_backend(spark: SparkSession, backend) -> HadoopLeaseBackend:
@@ -291,7 +306,7 @@ def acquire_writer_lease(
     lease = _lease_path(path)
     token = uuid.uuid4().hex
     for attempt in (0, 1):
-        if be.create_exclusive(lease, token):
+        if _create_lease(be, lease, token):
             return token
         mtime = be.stat_mtime_ms(lease)
         if mtime is None:
@@ -352,6 +367,30 @@ def acquire_writer_lease(
             "finishes, or delete the lease if its writer is dead."
         )
     raise ConcurrentWriterError(f"lost the takeover race on {path}")
+
+
+def _create_lease(be, lease: str, token: str) -> bool:
+    """``be.create_exclusive`` that leaves no owner-less lease behind.
+    A create that fails part-way may already have made the file — a
+    streaming query stop interrupts the local filesystem's chmod after
+    the create — and nobody would ever release it: every later writer
+    would refuse for the full TTL.  Such a file holds nothing or a
+    prefix of ``token``; it is deleted before the error propagates."""
+    import warnings
+
+    try:
+        return be.create_exclusive(lease, token)
+    except Exception:
+        try:
+            held = be.read_token(lease)
+            if held is not None and token.startswith(held):
+                be.delete(lease)
+        except Exception as cleanup:
+            warnings.warn(
+                f"could not remove the half-created lease {lease}: {cleanup}",
+                stacklevel=3,
+            )
+        raise
 
 
 def renew_writer_lease(
@@ -443,6 +482,7 @@ def hold_writer_lease(
     ttl_ms: int = LEASE_TTL_MS,
     heartbeat: bool = True,
     backend=None,
+    wait_ms: int = 0,
 ):
     """Acquire the writer lease and keep it ALIVE for the duration of
     the block: a daemon thread renews the lease every TTL/3, so a
@@ -451,11 +491,29 @@ def hold_writer_lease(
     looked abandoned and could be taken over mid-write).  The
     heartbeat never raises into the job; if the lease is lost to a
     takeover anyway (e.g. the driver was suspended past the TTL), the
-    loss is warned and release no-ops on exit."""
+    loss is warned and release no-ops on exit.
+
+    ``wait_ms`` (round 14): bounded patience for a FRESH lease — retry
+    acquisition until the deadline instead of failing fast.  A
+    concurrent writer from a DIFFERENT pipeline is a config error and
+    fail-fast (the default 0) is right; but a checkpointed streaming
+    RESTART can race the previous incarnation's release by
+    milliseconds (the killed query's callback is still unwinding when
+    the resumed query's first batch inserts — measured as a loaded-
+    suite flake), and there a short wait is the correct semantics."""
     import threading
+    import time
     import warnings
 
-    token = acquire_writer_lease(spark, path, ttl_ms, backend)
+    deadline = time.monotonic() + wait_ms / 1000.0
+    while True:
+        try:
+            token = acquire_writer_lease(spark, path, ttl_ms, backend)
+            break
+        except ConcurrentWriterError:
+            if time.monotonic() >= deadline:
+                raise
+            time.sleep(0.25)
     stop = threading.Event()
     owner = threading.current_thread()
     lease = _lease_path(path)
@@ -508,12 +566,48 @@ def hold_writer_lease(
         release_writer_lease(spark, path, token, backend)
 
 
+def _write_counted(
+    rows: DataFrame, path: str, mode: str, target_partitions: int | None = None
+) -> int:
+    """Write ``rows`` as parquet in ONE action and return its row count
+    from an ``Observation`` riding that action (no second count job).
+
+    Layout: size-targeted REBALANCE (guide §6) by default — without it
+    an append inherits the upstream partitioning (32 x ~23 KB files per
+    run at sf0.1, one fragment per shuffle partition), and a compaction
+    at repartition(shuffle.partitions) would FRAGMENT an already-compact
+    sink (1 file -> 32, round 16); with it AQE sizes the files to its
+    advisory partition target at any scale.  An explicit
+    ``target_partitions`` keeps the exact-count form."""
+    from pyspark.sql import Observation
+
+    if target_partitions is None:
+        rows = rows.hint("rebalance")
+    else:
+        rows = rows.repartition(int(target_partitions))
+    obs = Observation()
+    rows.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(mode).parquet(
+        path
+    )
+    return int(obs.get["n"])
+
+
+def _fresh_rows(df: DataFrame, keys: list[str]) -> DataFrame:
+    """One row per key, NULL keys rejected — the batch side of INSERT
+    OR IGNORE, shared by both sink protocols."""
+    fresh = df.dropDuplicates(keys)
+    for k in keys:
+        fresh = fresh.filter(F.col(k).isNotNull())
+    return fresh
+
+
 def insert_if_absent(
     spark: SparkSession,
     df: DataFrame,
     path: str,
     keys: list[str],
     lease_wait_ms: int = 0,
+    sink_protocol: str = "swap",
 ) -> int:
     """S5: INSERT OR IGNORE — append rows whose key is not already
     present; duplicate keys within ``df`` keep one arbitrary-but-
@@ -525,6 +619,12 @@ def insert_if_absent(
     sql:29-34), and a NULL key can never match a left_anti condition,
     so keeping such rows would re-append them on every run — breaking
     the idempotence this sink exists to provide.
+
+    The sink decides its own protocol: a path that is already
+    manifest-committed, or a ``sink_protocol="manifest"`` request,
+    goes through :func:`.manifest_sink.manifest_insert_if_absent`
+    (which adopts a legacy swap sink in place); otherwise the plain
+    swap append below runs.
 
     The appended count comes from an ``Observation`` on the single
     write action — the plan (scan + anti-join included) executes once,
@@ -547,69 +647,41 @@ def insert_if_absent(
     writer's lease is taken over after its TTL.  The lease is released
     in ``finally``: a failed Spark write job leaves no committed files
     (parquet commit protocol), so releasing after a failure is safe.
-
-    ``lease_wait_ms`` (round 14): bounded patience for a FRESH lease —
-    retry acquisition until the deadline instead of failing fast.  A
-    concurrent writer from a DIFFERENT pipeline is a config error and
-    fail-fast (the default 0) is right; but a checkpointed streaming
-    RESTART can race the previous incarnation's release by
-    milliseconds (the killed query's callback is still unwinding when
-    the resumed query's first batch inserts — measured as a loaded-
-    suite flake), and there a short wait is the correct semantics.
+    ``lease_wait_ms`` is :func:`hold_writer_lease`'s ``wait_ms``.
     """
-    import time as _time
-    from contextlib import ExitStack
+    if _uses_manifest(spark, path, sink_protocol):
+        from .manifest_sink import manifest_insert_if_absent
 
-    from pyspark.sql import Observation
-
-    _refuse_manifest_sink(spark, path, "manifest_insert_if_absent")
-    fresh = df.dropDuplicates(keys)
-    for k in keys:
-        fresh = fresh.filter(F.col(k).isNotNull())
-    stack = ExitStack()
-    deadline = _time.monotonic() + lease_wait_ms / 1000.0
-    while True:
-        try:
-            stack.enter_context(hold_writer_lease(spark, path))
-            break
-        except ConcurrentWriterError:
-            if _time.monotonic() >= deadline:
-                raise
-            _time.sleep(0.25)
-    with stack:
-        # existence probe THROUGH Spark, not os.path (round-9 fix, the
-        # streaming/ingest.py round-6 lesson applied to the batch
-        # sink): on HDFS/S3/ABFS a driver-local isdir() is always
-        # False, which would silently skip the anti-join and append
-        # duplicates on every run.  A missing/empty sink means
-        # everything is fresh; an existing-yet-unreadable sink still
-        # raises (only the two "no data here yet" conditions are
-        # tolerated).
+        return manifest_insert_if_absent(
+            spark, df, path, keys, lease_wait_ms=lease_wait_ms
+        )
+    fresh = _fresh_rows(df, keys)
+    with hold_writer_lease(spark, path, wait_ms=lease_wait_ms):
+        # a missing/empty sink means everything is fresh; an
+        # existing-yet-unreadable sink still raises (try_read_sink)
         existing = try_read_sink(spark, path)
         if existing is not None:
             fresh = fresh.join(existing.select(*keys), keys, "left_anti")
-        obs = Observation()
-        # REBALANCE before the write (guide §6): without it the append
-        # inherits the upstream partitioning (32 x ~23 KB files per
-        # run at sf0.1 — one fragment per shuffle partition); with it
-        # AQE coalesces/splits to advisoryPartitionSizeInBytes, so a
-        # small run appends one file and a 100 TB run appends
-        # target-sized files.  Row-preserving; the Observation rides
-        # the same single write action.
-        fresh.hint("rebalance").observe(
-            obs, F.count(F.lit(1)).alias("n")
-        ).write.mode("append").parquet(path)
-        return int(obs.get["n"])
+        return _write_counted(fresh, path, "append")
 
 
 def compact_parquet_sink(
-    spark: SparkSession, path: str, target_partitions: int | None = None
+    spark: SparkSession,
+    path: str,
+    target_partitions: int | None = None,
+    sink_protocol: str = "swap",
+    min_retention_minutes: float = 0.0,
 ) -> int:
     """Rewrite an append-fragmented sink as ``target_partitions`` files
     (default: AQE-rebalanced to advisory-sized files) — the small-files
     remedy for a sink that grows by one parquet fragment per pipeline
     run (round 10; the reference's single SQLite file never had this).
     Returns the number of rows compacted.
+
+    Like :func:`insert_if_absent`, the sink decides its own protocol:
+    a manifest-committed path (or a ``"manifest"`` request) compacts
+    through :func:`.manifest_sink.manifest_compact`, whose vacuum keeps
+    superseded generations younger than ``min_retention_minutes``.
 
     Unlike the index artifacts (minhash_index_compact), the sink is
     SOURCE OF TRUTH — "torn = rebuildable" is not an acceptable crash
@@ -628,54 +700,45 @@ def compact_parquet_sink(
     row.  Every rename/delete return code is checked — Hadoop FS
     reports failure by returning false, not raising.
     """
-    _refuse_manifest_sink(spark, path, "manifest_compact")
-    jvm, sink_p, fs = _hadoop_fs(spark, path)
+    if _uses_manifest(spark, path, sink_protocol):
+        from .manifest_sink import manifest_compact
 
-    def p(suffix: str):
-        return jvm.org.apache.hadoop.fs.Path(path + suffix)
+        return manifest_compact(
+            spark, path, target_partitions, min_retention_minutes
+        )
+    fs, hpath = _hadoop_fs(spark, path)
+    sink_p, old_p, compact_p = (
+        hpath(path), hpath(path + "__old"), hpath(path + "__compact")
+    )
 
     with hold_writer_lease(spark, path):
         # crash recovery from a previous compaction dying mid-swap
-        if not fs.exists(sink_p) and fs.exists(p("__old")):
-            if not fs.rename(p("__old"), sink_p):
+        if not fs.exists(sink_p) and fs.exists(old_p):
+            if not fs.rename(old_p, sink_p):
                 raise IOError(
                     f"compact: failed to restore {path} from {path}__old"
                 )
-        elif fs.exists(sink_p) and fs.exists(p("__old")):
+        elif fs.exists(sink_p) and fs.exists(old_p):
             # sink present + backup present = a previous swap COMPLETED
             # but died before deleting its backup; backup is superseded
-            fs.delete(p("__old"), True)
+            fs.delete(old_p, True)
         # a leftover compacted copy from a crash BEFORE the first
         # rename is stale (the sink may have grown since) — discard
-        fs.delete(p("__compact"), True)
-        rows = spark.read.parquet(path)
-        # default layout: size-targeted REBALANCE (round 16, guide §6)
-        # — the fixed repartition(shuffle.partitions) default predates
-        # the rebalanced appends and would now FRAGMENT an
-        # already-compact sink (1 file -> 32); AQE sizes the compacted
-        # files to its advisory partition target at any scale.  An
-        # explicit target_partitions keeps the exact-count form.
-        if target_partitions is not None:
-            rows = rows.repartition(int(target_partitions))
-        else:
-            rows = rows.hint("rebalance")
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        rows.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-            "overwrite"
-        ).parquet(path + "__compact")
-        n_rows = int(obs.get["n"])
+        fs.delete(compact_p, True)
+        n_rows = _write_counted(
+            spark.read.parquet(path), path + "__compact", "overwrite",
+            target_partitions,
+        )
         # the lease is a sibling file: it survives the renames below
         # untouched, so the insert_if_absent exclusion holds through
         # the entire swap window (no hand-off, no vacancy)
-        if not fs.rename(sink_p, p("__old")):
+        if not fs.rename(sink_p, old_p):
             raise IOError(f"compact: failed to back up {path}")
-        if not fs.rename(p("__compact"), sink_p):
+        if not fs.rename(compact_p, sink_p):
             # put the backup straight back — never leave the sink gone
-            fs.rename(p("__old"), sink_p)
+            fs.rename(old_p, sink_p)
             raise IOError(f"compact: failed to swap in {path}__compact")
-        if not fs.delete(p("__old"), True):
+        if not fs.delete(old_p, True):
             # round-11 review fix: the swap already SUCCEEDED — a
             # failed backup delete is a harmless leftover (the next
             # run's recovery removes it), not a compaction failure.

@@ -36,7 +36,13 @@ from ..operators.asof import JOURNEY_HOT_THRESHOLD, journey_asof_join
 #: cliff (BASELINE.md hot-key table).  0/None opts out.
 HOT_USER_THRESHOLD_DEFAULT = JOURNEY_HOT_THRESHOLD
 from ..operators.ihc import attribute_by_conv_type, attribution_sum_violations
-from ..operators.sinks import export_csv, insert_if_absent, overwrite_partitions
+from ..operators.sinks import (
+    check_sink_protocol,
+    export_csv,
+    insert_if_absent,
+    overwrite_partitions,
+    try_read_sink,
+)
 from .report import channel_report, report_metrics
 
 
@@ -118,20 +124,17 @@ def run_pipeline(
     note); pass 0 or None to opt out and keep the plain 1-exchange
     plan.
 
-    ``sink_protocol`` (round 11): ``"swap"`` writes the attribution
-    sink through the plain lease-guarded ``insert_if_absent``;
-    ``"manifest"`` routes it through the manifest-committed sink
+    ``sink_protocol`` (round 11) is passed through to
+    ``insert_if_absent`` and applies only to an attribution sink with
+    no manifest yet: ``"swap"`` = plain lease-guarded appends,
+    ``"manifest"`` = the manifest-committed sink
     (operators/manifest_sink.py) — reader-stable compaction, atomic
     visibility of each run's appended rows, legacy sinks adopted in
-    place.  The two protocols must not be mixed on one path (both
-    sides refuse loudly).
+    place.  A manifest sink stays manifest whatever is passed.
     """
     validate_date(start_date, "start_date")
     validate_date(end_date, "end_date")
-    if sink_protocol not in ("swap", "manifest"):
-        raise ValueError(
-            f"sink_protocol must be 'swap' or 'manifest', got {sink_protocol!r}"
-        )
+    check_sink_protocol(sink_protocol)
 
     conversions = M.conversions(spark, sf_dir)
     if start_date:
@@ -145,19 +148,7 @@ def run_pipeline(
     # would silently re-score everything every run; an existing-yet-
     # unreadable sink still raises (only the no-data-yet conditions
     # are tolerated).
-    from ..operators.sinks import try_read_sink
-
-    if sink_protocol == "manifest":
-        from ..operators.manifest_sink import read_manifest_sink
-
-        # falls back to the plain read pre-adoption (first manifest
-        # run over a legacy sink): the plain listing sees the same
-        # committed rows the adoption will
-        sink_df = read_manifest_sink(spark, attribution_path)
-        if sink_df is None:
-            sink_df = try_read_sink(spark, attribution_path)
-    else:
-        sink_df = try_read_sink(spark, attribution_path)
+    sink_df = try_read_sink(spark, attribution_path)
     if sink_df is not None:
         todo = conversions.join(
             sink_df.select("conv_id").distinct(), "conv_id", "left_anti"
@@ -244,25 +235,15 @@ def run_pipeline(
         conversions_scored = int(counts["scored"])
 
         # 6a. INSERT OR IGNORE upsert (S5)
-        if sink_protocol == "manifest":
-            from ..operators.manifest_sink import manifest_insert_if_absent
-
-            written = manifest_insert_if_absent(
-                spark, scored, attribution_path, ["conv_id", "session_id"]
-            )
-        else:
-            written = insert_if_absent(
-                spark, scored, attribution_path, ["conv_id", "session_id"]
-            )
+        written = insert_if_absent(
+            spark, scored, attribution_path, ["conv_id", "session_id"],
+            sink_protocol=sink_protocol,
+        )
     finally:
         scored.unpersist()
 
-    if sink_protocol == "manifest":
-        from ..operators.manifest_sink import read_manifest_sink
-
-        all_attribution = read_manifest_sink(spark, attribution_path)
-    else:
-        all_attribution = spark.read.parquet(attribution_path)
+    # the insert always leaves a readable sink (sinks.insert_if_absent)
+    all_attribution = try_read_sink(spark, attribution_path)
 
     # 6b + 6c, overlapped (round 15, guide §2.6): the A2 invariant
     # check needs only the POST-WRITE attribution sink, while the

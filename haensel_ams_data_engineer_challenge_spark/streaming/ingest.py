@@ -33,11 +33,11 @@ from ..operators.dedup import (
     incremental_new_docs,
     normalize_text,
 )
-from ..operators.sinks import insert_if_absent
-
-#: AnalysisException conditions meaning "no data here yet" — the only
-#: ones the sink/state probes may tolerate (round-7 advice #3).
-_MISSING = {"PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"}
+from ..operators.sinks import (
+    check_sink_protocol,
+    insert_if_absent,
+    try_read_sink,
+)
 
 
 def dedup_batch_within(batch: DataFrame) -> DataFrame:
@@ -45,20 +45,6 @@ def dedup_batch_within(batch: DataFrame) -> DataFrame:
     (min doc_id — dedup_exact's keep policy)."""
     keep = dedup_exact(batch).select(F.col("keep_id").alias("doc_id"))
     return batch.join(keep, "doc_id", "left_semi")
-
-
-def _try_read(ss: SparkSession, path: str, schema=None) -> DataFrame | None:
-    from pyspark.errors import AnalysisException
-
-    try:
-        reader = ss.read.schema(schema) if schema is not None else ss.read
-        df = reader.parquet(path)
-        df.schema
-        return df
-    except AnalysisException as e:
-        if e.getCondition() not in _MISSING:
-            raise
-        return None
 
 
 def _bloom_checksum(words: dict[int, int]) -> int:
@@ -83,7 +69,7 @@ def _load_bloom_words(
     (<= m_bits/64 entries — size m_bits to the corpus AND the
     driver/broadcast budget together; past that, partition the
     keyspace)."""
-    params = _try_read(ss, f"{state_dir}/params")
+    params = try_read_sink(ss, f"{state_dir}/params")
     if params is None:
         return None
     got = {r["key"]: r["value"] for r in params.collect()}
@@ -93,7 +79,7 @@ def _load_bloom_words(
             f"bloom state at {state_dir} was built with {got}; caller "
             f"expects {exp} — use a different state dir or delete it"
         )
-    bm = _try_read(ss, f"{state_dir}/bitmap")
+    bm = try_read_sink(ss, f"{state_dir}/bitmap")
     if bm is None:
         return None
     words = {r["word_idx"]: r["bits"] for r in bm.collect()}
@@ -311,11 +297,8 @@ def run_streaming_ingest(
     # protocol — each micro-batch's rows become visible to readers
     # ATOMICALLY at one manifest rename, and compaction never leaves a
     # window where the sink path reads empty.  Replay semantics are
-    # unchanged (manifest_insert_if_absent anti-joins committed rows).
-    if sink_protocol not in ("swap", "manifest"):
-        raise ValueError(
-            f"sink_protocol must be 'swap' or 'manifest', got {sink_protocol!r}"
-        )
+    # unchanged (the manifest insert anti-joins committed rows).
+    check_sink_protocol(sink_protocol)
     if url_bloom_state_dir is not None and url_dedup_col is None:
         raise ValueError(
             "url_bloom_state_dir needs url_dedup_col: the bitmap is "
@@ -347,20 +330,8 @@ def run_streaming_ingest(
         # on HDFS/S3/ABFS where a driver-local isdir() is always False
         # and would silently exclude admitted docs from the dedup
         # target, re-admitting cross-batch duplicates (round-6 advice
-        # #1).  A missing/empty sink raises AnalysisException
-        # (PATH_NOT_FOUND / UNABLE_TO_INFER_SCHEMA) at read time —
-        # exactly the "first batch" case; only those conditions are
-        # tolerated (round-7 advice #3, `_try_read`).
-        if sink_protocol == "manifest":
-            from ..operators.manifest_sink import read_manifest_sink
-
-            # committed rows only; pre-adoption (first manifest run
-            # over a legacy sink) falls back to the plain listing
-            sink = read_manifest_sink(ss, sink_path)
-            if sink is None:
-                sink = _try_read(ss, sink_path, corpus.schema)
-        else:
-            sink = _try_read(ss, sink_path, corpus.schema)
+        # #1).  None = the "first batch" case (sinks.try_read_sink).
+        sink = try_read_sink(ss, sink_path, corpus.schema)
         if sink is not None:
             existing = existing.unionByName(sink)
         if url_dedup_col is not None:
@@ -736,12 +707,9 @@ def run_streaming_ingest(
             _write_bloom_state(
                 ss, url_bloom_state_dir, url_bloom_words, m_bits, k
             )
-        if sink_protocol == "manifest":
-            from ..operators.manifest_sink import manifest_insert_if_absent
-
-            manifest_insert_if_absent(ss, admitted, sink_path, ["doc_id"])
-        else:
-            insert_if_absent(ss, admitted, sink_path, ["doc_id"])
+        insert_if_absent(
+            ss, admitted, sink_path, ["doc_id"], sink_protocol=sink_protocol
+        )
 
     (
         feed.writeStream.foreachBatch(admit_batch)

@@ -59,8 +59,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..checkpoint import materialize
 from ..operators.embed import embed_with_model
 from ..operators.similarity import _read_index_params
-from ..operators.sinks import insert_if_absent
-from .ingest import _try_read
+from ..operators.sinks import (
+    check_sink_protocol,
+    insert_if_absent,
+    try_read_sink,
+)
 from .vectors import (
     VECTOR_DEDUP_BANDS,
     VECTOR_DEDUP_PLANES,
@@ -95,11 +98,7 @@ def run_streaming_media_ingest(
     each batch at one atomic manifest rename (the vectors side-store
     is internal dedup state, not a reader surface — it stays on the
     keyed insert either way)."""
-    if sink_protocol not in ("swap", "manifest"):
-        raise ValueError(
-            f"sink_protocol must be 'swap' or 'manifest', got "
-            f"{sink_protocol!r}"
-        )
+    check_sink_protocol(sink_protocol)
     # driver-side validation before any task runs: a missing/foreign
     # artifact raises here, and the embedder identity pins the index
     enc = _read_index_params(spark, encoder_path)
@@ -124,7 +123,7 @@ def run_streaming_media_ingest(
         ss = batch.sparkSession
         # bootstrap the vectors side-store from the media corpus ONCE
         # (the one full-corpus decode; every later batch reads it back)
-        vecs_existing = _try_read(ss, vectors_path)
+        vecs_existing = try_read_sink(ss, vectors_path)
         if vecs_existing is None:
             insert_if_absent(
                 ss,
@@ -162,12 +161,10 @@ def run_streaming_media_ingest(
         ).unionByName(featureless)
         # write order: index (inside the core) -> media sink ->
         # vectors store (module docstring: every gap self-heals)
-        if sink_protocol == "manifest":
-            from ..operators.manifest_sink import manifest_insert_if_absent
-
-            manifest_insert_if_absent(ss, admitted_media, sink_path, [id_col])
-        else:
-            insert_if_absent(ss, admitted_media, sink_path, [id_col])
+        insert_if_absent(
+            ss, admitted_media, sink_path, [id_col],
+            sink_protocol=sink_protocol,
+        )
         insert_if_absent(ss, admitted_vecs, vectors_path, ["vec_id"])
 
     (

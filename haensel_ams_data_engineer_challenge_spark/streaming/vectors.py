@@ -42,8 +42,11 @@ from ..operators.similarity import (
     lsh_index_persistent,
     vector_dup_probe,
 )
-from ..operators.sinks import insert_if_absent
-from .ingest import _try_read
+from ..operators.sinks import (
+    check_sink_protocol,
+    insert_if_absent,
+    try_read_sink,
+)
 
 #: default exact-cosine acceptance — the near-identical regime vector
 #: dedup targets.
@@ -154,12 +157,8 @@ def run_streaming_vector_ingest(
     partial append or a compaction window.  Admission semantics are
     unchanged (the keyed insert anti-joins committed rows); a legacy
     swap-protocol store is adopted in place on the first manifest
-    batch."""
-    if sink_protocol not in ("swap", "manifest"):
-        raise ValueError(
-            f"sink_protocol must be 'swap' or 'manifest', got "
-            f"{sink_protocol!r}"
-        )
+    batch, and a manifest store stays manifest whatever is passed."""
+    check_sink_protocol(sink_protocol)
     corpus = spark.read.parquet(corpus_path)
     # one driver-side probe of the corpus vector dim (round 12): raw
     # embedding feeds carry no artifact to read it from, and a
@@ -185,16 +184,7 @@ def run_streaming_vector_ingest(
     def admit_batch(batch: DataFrame, batch_id: int) -> None:
         ss = batch.sparkSession
         existing = corpus
-        if sink_protocol == "manifest":
-            from ..operators.manifest_sink import read_manifest_sink
-
-            # committed rows only; pre-adoption (first manifest run
-            # over a legacy sink) falls back to the plain listing
-            sink = read_manifest_sink(ss, sink_path)
-            if sink is None:
-                sink = _try_read(ss, sink_path, corpus.schema)
-        else:
-            sink = _try_read(ss, sink_path, corpus.schema)
+        sink = try_read_sink(ss, sink_path, corpus.schema)
         if sink is not None:
             existing = existing.unionByName(sink)
         # the batch feeds the pair search, the survivor filter, the
@@ -218,12 +208,9 @@ def run_streaming_vector_ingest(
             threshold, bands, planes_per_band, id_col, vec_col,
             dim=batch_dim,
         )
-        if sink_protocol == "manifest":
-            from ..operators.manifest_sink import manifest_insert_if_absent
-
-            manifest_insert_if_absent(ss, admitted, sink_path, [id_col])
-        else:
-            insert_if_absent(ss, admitted, sink_path, [id_col])
+        insert_if_absent(
+            ss, admitted, sink_path, [id_col], sink_protocol=sink_protocol
+        )
 
     (
         feed.writeStream.foreachBatch(admit_batch)

@@ -93,7 +93,7 @@ def test_conv_type_id_unknown_raises(spark, sf_dir, tmp_path):
 def test_manifest_sink_protocol_e2e(spark, sf_dir, tmp_path):
     """Round 11: sink_protocol='manifest' — same pipeline results as
     the swap protocol, plus reader-stable compaction and atomic
-    visibility; mixing protocols on one path refuses loudly."""
+    visibility; a swap-requested compaction keeps the sink manifest."""
     from haensel_ams_data_engineer_challenge_spark.operators import (
         manifest_sink as MS,
         sinks,
@@ -120,9 +120,23 @@ def test_manifest_sink_protocol_e2e(spark, sf_dir, tmp_path):
     assert MS.manifest_compact(spark, acj, target_partitions=1) == expected
     assert reader.count() == expected  # pre-compaction snapshot intact
 
-    # the swap protocol refuses a manifest-committed sink
-    with pytest.raises(ValueError, match="manifest-committed"):
-        sinks.compact_parquet_sink(spark, acj)
+    # a swap-requested compaction of a manifest sink routes through
+    # the manifest: a new generation commits, the snapshot taken
+    # before it stays whole, and every data file on disk belongs to
+    # a manifest still on disk (nothing orphaned)
+    v_before = MS._resolve_latest(spark, acj)[0]
+    reader = MS.read_manifest_sink(spark, acj)
+    assert sinks.compact_parquet_sink(spark, acj) == expected
+    v_after, man = MS._resolve_latest(spark, acj)
+    assert v_after == v_before + 1
+    assert reader.count() == expected
+    names = MS._list_names(spark, acj)
+    retained = {
+        f for v in MS._manifest_versions(names)
+        for f in MS._read_manifest(spark, acj, v)["files"]
+    }
+    assert set(man["files"]) <= MS._data_files(names) <= retained
+
     with pytest.raises(ValueError, match="unknown|swap"):
         run_pipeline(spark, sf_dir, acj, rep, sink_protocol="nope")
 

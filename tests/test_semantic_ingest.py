@@ -468,15 +468,24 @@ def test_cli_ingest_manifest_protocol(spark, tmp_path, capsys):
     sink = f"{work}/admitted"
     committed = MS.read_manifest_sink(spark, sink)
     assert {r["doc_id"] for r in committed.collect()} == {301, 303}
-    # the swap protocol refuses this sink now
-    import pytest as _pytest
-
+    # a swap-requested compaction of this sink commits through the
+    # manifest: the snapshot taken before it stays whole and every
+    # data file on disk belongs to a manifest still on disk
     from haensel_ams_data_engineer_challenge_spark.operators.sinks import (
         compact_parquet_sink,
     )
 
-    with _pytest.raises(ValueError, match="manifest-committed"):
-        compact_parquet_sink(spark, sink)
+    v_before = MS._resolve_latest(spark, sink)[0]
+    assert compact_parquet_sink(spark, sink) == 2
+    v_after, man = MS._resolve_latest(spark, sink)
+    assert v_after == v_before + 1
+    assert {r["doc_id"] for r in committed.collect()} == {301, 303}
+    names = MS._list_names(spark, sink)
+    retained = {
+        f for v in MS._manifest_versions(names)
+        for f in MS._read_manifest(spark, sink, v)["files"]
+    }
+    assert set(man["files"]) <= MS._data_files(names) <= retained
     # replayed drain (same work dir, fresh checkpoint => the feed
     # re-fires): the committed-rows anti-join makes it a no-op
     import shutil

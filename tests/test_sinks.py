@@ -417,6 +417,39 @@ def test_conditional_put_lease_backend(spark, tmp_path):
     assert lease_key not in be.objs
 
 
+def test_interrupted_lease_create_leaves_no_lease(spark, tmp_path):
+    """A create that dies after making the lease file (a streaming stop
+    interrupting the local filesystem's chmod) must not leave an
+    owner-less lease that blocks every writer for the TTL; a create
+    failing against another writer's lease never deletes it."""
+
+    class DiesAfterCreate(_FakeConditionalPutBackend):
+        def __init__(self):
+            super().__init__()
+            self.fail = True
+
+        def create_exclusive(self, path, token):
+            if not self.fail:
+                return super().create_exclusive(path, token)
+            self.fail = False
+            self.objs.setdefault(path, ("", self.now_ms()))
+            raise RuntimeError("interrupted")
+
+    path = str(tmp_path / "sink")
+    lease_key = path + "__lease"
+    be = DiesAfterCreate()
+    with pytest.raises(RuntimeError, match="interrupted"):
+        sinks.acquire_writer_lease(spark, path, backend=be)
+    assert lease_key not in be.objs
+    token = sinks.acquire_writer_lease(spark, path, backend=be)
+    assert be.read_token(lease_key) == token
+
+    be.fail = True
+    with pytest.raises(RuntimeError, match="interrupted"):
+        sinks.acquire_writer_lease(spark, path, backend=be)
+    assert be.read_token(lease_key) == token  # the live lease survives
+
+
 def test_insert_if_absent_lease_wait(spark, tmp_path):
     """Round 14 (kill-and-resume flake root cause): with
     lease_wait_ms, a FRESH lease released shortly after the attempt
